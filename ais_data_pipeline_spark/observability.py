@@ -4,8 +4,7 @@ The reference Lambda emits one-line JSON events ``{event, level, ts,
 **fields}`` (reference dubai-dataset/lambdas/data-ingestion/
 lambda_handler.py:18-31) and keeps async-safe per-operation counters
 returned in the job summary (lambda_handler.py:35-59). The engine keeps
-the same observable contract; counters additionally have a Spark-
-accumulator-backed variant for distributed code paths.
+the same observable contract.
 """
 
 from __future__ import annotations
@@ -48,26 +47,6 @@ class OpCounter:
     def snapshot(self) -> dict[str, int]:
         with self._lock:
             out = dict(self._counts)
-        out["total"] = sum(out.values())
-        return out
-
-
-class AccumulatorCounter:
-    """Executor-side counter: one Spark LongAccumulator per operation.
-
-    Use inside ``foreachPartition``/UDF-adjacent code where Python
-    threads on the driver can't see executor increments.
-    """
-
-    def __init__(self, spark, ops: list[str]) -> None:
-        sc = spark.sparkContext
-        self._accs = {op: sc.accumulator(0) for op in ops}
-
-    def incr(self, op: str, n: int = 1) -> None:
-        self._accs[op].add(n)
-
-    def snapshot(self) -> dict[str, int]:
-        out = {op: acc.value for op, acc in self._accs.items()}
         out["total"] = sum(out.values())
         return out
 

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -23,23 +25,36 @@ def in_values_cond(col_name: str, values) -> "F.Column":
     [In(col, …)]``), same NULL semantics (a NULL literal in the list
     never matches, exactly like ``isin``). Values may be str, int,
     float, bool, or None. Empty list → ``false`` (isin() with an empty
-    list is the same constant-false filter)."""
+    list is the same constant-false filter).
+
+    Every value round-trips exactly under either setting of
+    ``spark.sql.parser.escapedStringLiterals``: a string holding a
+    quote or a backslash renders as ``CAST(X'<utf-8 hex>' AS STRING)``
+    (no escape sequence to interpret; constant-folded to the same
+    literal before pushdown), and a non-finite float as
+    ``CAST('NaN' | 'Infinity' | '-Infinity' AS DOUBLE)``."""
     if not values:
         return F.lit(False)
-    rendered = []
-    for v in values:
-        if v is None:
-            rendered.append("NULL")
-        elif isinstance(v, bool):
-            rendered.append("true" if v else "false")
-        elif isinstance(v, int):
-            rendered.append(f"{v}L")
-        elif isinstance(v, float):
-            rendered.append(repr(v) + "D")
-        else:
-            rendered.append("'" + str(v).replace("\\", "\\\\").replace("'", "\\'") + "'")
     quoted = "`" + col_name.replace("`", "``") + "`"
-    return F.expr(f"{quoted} IN ({', '.join(rendered)})")
+    return F.expr(f"{quoted} IN ({', '.join(_sql_literal(v) for v in values)})")
+
+
+def _sql_literal(v) -> str:
+    if v is None:
+        return "NULL"
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    if isinstance(v, int):
+        return f"{v}L"
+    if isinstance(v, float):
+        if math.isfinite(v):
+            return repr(v) + "D"
+        name = "NaN" if math.isnan(v) else ("Infinity" if v > 0 else "-Infinity")
+        return f"CAST('{name}' AS DOUBLE)"
+    s = str(v)
+    if "'" in s or "\\" in s:
+        return f"CAST(X'{s.encode('utf-8').hex()}' AS STRING)"
+    return f"'{s}'"
 
 
 def _auto_broadcast_bytes(df: DataFrame) -> int:

@@ -22,18 +22,27 @@ Drop rule (deterministic, oracle-expressible — no iteration):
   parameters to ``minhash_near_dup``, whose brute-force oracle proves
   banding recall on this corpus.
 
-Scale shape: the index side is never shuffled — batch hashes / band
-rows / candidate id-lists are tiny and BROADCAST, so every index probe
-is one pruned-or-streamed scan of the index table with a broadcast-hash
-join. Index appends are ``src_batch=`` partition directories written
-with dynamic partition overwrite: a replayed micro-batch overwrites its
-own partition, making the sink idempotent (the same
-checkpoint+idempotence recipe as ``ingest.run_upsert_sink``).
+Scale shape: the index side is never shuffled. A micro-batch of at
+most ``pushdown_limit`` docs probes in three collects: (1) one narrow
+job over the pinned batch frame brings its ids, hashes and band
+buckets to the driver; (2) one job scans the hashes and buckets tables
+with those sets pushed as literal IN-filters (bloom row-group
+skipping) and brings the hits back, capped at ``pushdown_limit + 1``
+rows; (3) one collect verifies exact Jaccard for the within-batch pairs
+and the index candidates, which return as a local relation. A set
+past the cap falls back to the lazy form larger batches use, where
+batch hashes / band rows / candidate id-lists are BROADCAST, so every
+index probe is one pruned-or-streamed scan of the index table with a
+broadcast-hash join. Index appends are ``src_batch=`` partition
+directories written with dynamic partition overwrite: a replayed
+micro-batch overwrites its own partition, making the sink idempotent
+(the same checkpoint+idempotence recipe as ``ingest.run_upsert_sink``).
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -302,25 +311,47 @@ def _hot_buckets(
 def _jaccard_drops(
     pairs: DataFrame,  # (doc, other) candidate pairs, doc = batch side
     batch_sh: DataFrame,  # (doc, shingles)
-    other_sh: DataFrame,  # (other, other_shingles)
+    other_sh: DataFrame,  # (doc, shingles) of the ``other`` side
     threshold: float,
 ) -> DataFrame:
     """Batch docs whose exact Jaccard vs a candidate clears the
     threshold — the verify half of LSH dedup, on stored shingle
-    hashes (array_intersect on longs, same as minhash_near_dup)."""
+    hashes (array_intersect on longs, same as minhash_near_dup). A doc
+    repeats once per passing pair; callers dedupe. Both shingle sides
+    join as broadcasts keyed by ``doc``, so a within-batch verify
+    (``other_sh`` is ``batch_sh``) broadcasts the batch shingles once
+    and reuses the exchange."""
     scored = (
         pairs.join(F.broadcast(batch_sh), "doc")
-        .join(F.broadcast(other_sh), "other")
-        .withColumn("n_inter", F.size(F.array_intersect("shingles", "other_shingles")))
+        .select(
+            F.col("doc").alias("__doc"),
+            F.col("other").alias("doc"),
+            F.col("shingles").alias("__sh"),
+        )
+        .join(F.broadcast(other_sh), "doc")
+        .withColumn("n_inter", F.size(F.array_intersect("__sh", "shingles")))
         .withColumn(
             "jaccard",
             F.col("n_inter").cast("double")
-            / (
-                F.size("shingles") + F.size("other_shingles") - F.col("n_inter")
-            ).cast("double"),
+            / (F.size("__sh") + F.size("shingles") - F.col("n_inter")).cast("double"),
         )
     )
-    return scored.filter(F.col("jaccard") >= threshold).select("doc").distinct()
+    return scored.filter(F.col("jaccard") >= threshold).select(
+        F.col("__doc").alias("doc")
+    )
+
+
+def _within_pairs(bands_b: DataFrame, build: DataFrame) -> DataFrame:
+    """(3) near-dup, within batch: (doc, other) pairs of batch docs
+    sharing a band bucket, ``other < doc`` — the predecessor rule drops
+    the larger id. ``build`` is ``bands_b`` itself or its broadcast. A
+    pair repeats once per shared band."""
+    return (
+        bands_b.select(F.col("doc").alias("other"), "band", "bucket")
+        .join(build, ["band", "bucket"])
+        .filter(F.col("other") < F.col("doc"))
+        .select("doc", "other")
+    )
 
 
 def dedup_batch_against_index(
@@ -359,7 +390,7 @@ def _dedup_batch_parts(
     pushdown_limit: int = 10_000,
     exclude_batch: int | None = None,
     pin_drops: bool = True,
-) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame, bool, int, int]:
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame | None, bool, int, int, list | None]:
     """Survivors of one batch under the drop rule in the module
     docstring. The batch (small) is always the broadcast side; the
     index tables are scanned once each with the batch's hash / bucket
@@ -384,28 +415,37 @@ def _dedup_batch_parts(
     pages. That is what keeps probe IO sub-linear in corpus size, on
     top of staying shuffle-free.
 
-    Job shape (r19, guide §1.2 step 1 — the per-micro-batch job floor
-    was the leg's dominant cost): ONE materialize pins everything the
-    batch derives — features, the exact-keep representative (the
-    keep-min groupBy + broadcast join folded into the same job), and
-    the PER-ROW minhash band array (``minhash_band_structs_sql``; the
-    old shape paid a second materialize + a signature shuffle per
-    batch). Band rows are then a narrow explode of the pinned frame
-    per consumer. The batch's distinct hash AND bucket probe sets
-    collect in one unioned job, and ``n_in`` rides the materialize as
-    an Observation — 3 driver jobs per batch before the writes, down
-    from 7.
+    Job shape: ONE materialize pins everything the batch derives —
+    features, the exact-keep representative (the keep-min groupBy +
+    broadcast join folded into the same job), and the PER-ROW minhash
+    band array (``minhash_band_structs_sql``) — with ``n_in`` riding it
+    as an Observation. Band rows are then a narrow explode of the
+    pinned frame per consumer. What follows depends on the regime:
+
+    - small (``pin_drops`` and ``n_in <= pushdown_limit``, every sink
+      micro-batch): three collects, ``_small_batch_drop_ids`` — each
+      set that crosses between the batch and the index goes to the
+      driver once and comes back as literals or a local relation, so
+      no chain of dependent broadcast and AQE-stage jobs forms; a
+      300-doc batch runs 15 jobs, writes included. A bucket set or an
+      index-hit list past ``pushdown_limit`` sends the index legs back
+      to the lazy broadcast-join form inside the verify collect.
+    - large / lazy: the batch's distinct hash AND bucket probe sets
+      collect in one unioned job (each capped at ``pushdown_limit +
+      1``), and the four drop legs stay one lazy broadcast-join DAG —
+      pinned with its count when ``pin_drops``, else returned lazy so
+      the public probe's plan exposes the broadcast-probe shape.
 
     Returns ``(survivors, enriched, bands_b, drops, bands_filtered,
     n_in, n_drops, drop_ids)`` so the append path can REUSE the
     batch's pinned features/band rows for the survivor index writes
     instead of recomputing the md5/shingle/minhash passes (r18), plus
-    the already-observed accounting counts (r19; ``n_drops`` is -1
-    when ``pin_drops=False`` leaves the drop set lazy). ``drop_ids``
-    is the COLLECTED drop set when the batch is small enough
-    (``n_in <= pushdown_limit``) for consumers to filter by literal
-    NOT-IN values instead of broadcast anti-joins — one probe job, no
-    per-consumer broadcast-exchange jobs. ``bands_filtered`` is True
+    the already-observed accounting counts (``n_drops`` is -1 when
+    ``pin_drops=False`` leaves the drop set lazy). In the small regime
+    ``drop_ids`` is the collected drop set (NULL ids left out) and
+    ``drops`` is None: consumers filter by literal NOT-IN values
+    instead of broadcast anti-joins. Otherwise ``drop_ids`` is None and
+    ``drops`` the drop-set frame. ``bands_filtered`` is True
     when a hot-bucket cap pruned ``bands_b`` — the reused band rows
     are then NOT the survivors' complete band set and the caller must
     recompute."""
@@ -463,7 +503,6 @@ def _dedup_batch_parts(
     )
     n_in = int(obs_in.get["n"])
     feats = enriched  # (doc, text_hash, shingles) + batch-derived cols
-    exact_w = enriched.filter("__xw").select("doc")
 
     # band rows are a NARROW explode of the pinned per-row array —
     # exact-dropped docs carry a NULL array, so explode skips them
@@ -490,11 +529,31 @@ def _dedup_batch_parts(
             F.broadcast(hot), ["band", "bucket"], "left_anti"
         ).transform(materialize)
 
+    def scan(table: str, schema: str) -> DataFrame:
+        # one index table minus this batch's own slice (partition
+        # pruning makes the exclusion free)
+        df = spark.read.schema(schema).parquet(os.path.join(root, table))
+        if exclude_batch is not None:
+            df = df.filter(F.col("src_batch") != exclude_batch)
+        return df
+
+    bands_filtered = max_bucket_size is not None
+
+    if pin_drops and n_in <= pushdown_limit:
+        drop_ids = _small_batch_drop_ids(
+            feats, bands_b, scan, threshold, pushdown_limit
+        )
+        survivors = batch_df.filter(_keep_cond(id_col, drop_ids))
+        return (
+            survivors, feats, bands_b, None, bands_filtered, n_in,
+            len(drop_ids), drop_ids,
+        )
+
     # the batch's distinct hash AND bucket probe sets collect in ONE
     # unioned job (r19; two scheduler rounds per batch became one) —
     # both sides are cheap scans of the pinned frame, each capped at
-    # pushdown_limit+1 exactly like the old per-set collects. Buckets
-    # ride as strings (BIGINT→string→int round-trips exactly).
+    # pushdown_limit+1. Buckets ride as strings (BIGINT→string→int
+    # round-trips exactly).
     lim = pushdown_limit + 1
     probe_rows = (
         feats.select(F.lit(0).alias("__t"), F.col("text_hash").alias("__v"))
@@ -513,59 +572,75 @@ def _dedup_batch_parts(
     batch_buckets = [
         int(r["__v"]) for r in probe_rows if r["__t"] == 1 and r["__v"] is not None
     ]
-
-    # (2) exact, vs index: probe the (huge) hash table with the batch's
-    # hash set — as a pushed IN-filter when small (bloom row-group
-    # skipping), else a broadcast semi-join — then anti the (tiny)
-    # match-list back
-    hist_hashes = spark.read.schema(_HASHES_SCHEMA).parquet(
-        os.path.join(root, "hashes")
+    exact_x, near_x = _index_drop_legs(
+        feats, bands_b, scan, threshold,
+        batch_hashes if len(batch_hashes) <= pushdown_limit else None,
+        batch_buckets if len(batch_buckets) <= pushdown_limit else None,
     )
-    if exclude_batch is not None:
-        hist_hashes = hist_hashes.filter(F.col("src_batch") != exclude_batch)
-    if len(batch_hashes) <= pushdown_limit:
-        probed_hashes = hist_hashes.filter(in_values_cond("text_hash", batch_hashes))
+    exact_w = enriched.filter("__xw").select("doc")
+    batch_sh = feats.select("doc", "shingles")
+    near_w = _jaccard_drops(
+        _within_pairs(bands_b, bands_b).distinct(), batch_sh, batch_sh, threshold
+    )
+
+    # ``pin_drops``: the append path anti-joins the drop set against
+    # batch_df, feats AND bands_b, and an un-pinned union would re-run
+    # all four probe legs per consumer — materialize it once (tiny:
+    # dropped ids only), with the drop count riding the same job (r19).
+    # The single-consumer probe (public dedup_batch_against_index)
+    # keeps it lazy so the returned plan still EXPOSES the
+    # broadcast-probe shape (plan-gated in pytest).
+    drops = exact_w.union(exact_x).union(near_w).union(near_x).distinct()
+    n_drops = -1
+    if pin_drops:
+        from ais_data_pipeline_spark.checkpointing import materialize_counted
+
+        drops, n_drops = materialize_counted(drops)
+    survivors = batch_df.join(
+        F.broadcast(drops.withColumnRenamed("doc", id_col)),
+        id_col,
+        "left_anti",
+    )
+    return (
+        survivors, feats, bands_b, drops, bands_filtered, n_in, n_drops, None,
+    )
+
+
+def _index_drop_legs(
+    feats: DataFrame,
+    bands_b: DataFrame,
+    scan: Callable[[str, str], DataFrame],
+    threshold: float,
+    hashes: list | None,
+    buckets: list | None,
+) -> tuple[DataFrame, DataFrame]:
+    """The two batch-vs-index drop legs as lazy broadcast-join DAGs.
+
+    (2) exact: probe the (huge) hash table with the batch's hash set —
+    as a pushed IN-filter when ``hashes`` is a literal list (bloom
+    row-group skipping), else a broadcast semi-join — then semi-join
+    the (tiny) match list back onto the batch.
+    (4) near-dup: probe the bucket table with the broadcast batch band
+    rows (IN-pruned on the bucket value when ``buckets`` is a list) and
+    verify against the stored shingles of just the candidate index
+    docs."""
+    hist_hashes = scan("hashes", _HASHES_SCHEMA)
+    if hashes is not None:
+        probed = hist_hashes.filter(in_values_cond("text_hash", hashes))
     else:
-        probed_hashes = hist_hashes.join(
+        probed = hist_hashes.join(
             F.broadcast(feats.select("text_hash").distinct()), "text_hash", "left_semi"
         )
-    hit_hashes = probed_hashes.select("text_hash").distinct()
-    exact_x = feats.join(F.broadcast(hit_hashes), "text_hash", "left_semi").select(
-        "doc"
-    )
+    exact_x = feats.join(
+        F.broadcast(probed.select("text_hash").distinct()), "text_hash", "left_semi"
+    ).select("doc")
 
-    # (3) near-dup, within batch: shared band bucket -> a < b pairs,
-    # exact-Jaccard verify, drop the larger id
-    a, b = bands_b.alias("a"), bands_b.alias("b")
-    cands_w = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket")),
-        )
-        .filter(F.col("a.doc") < F.col("b.doc"))
-        .select(F.col("b.doc").alias("doc"), F.col("a.doc").alias("other"))
-        .distinct()
-    )
-    batch_sh = feats.select("doc", "shingles")
-    other_sh_w = feats.select(
-        F.col("doc").alias("other"), F.col("shingles").alias("other_shingles")
-    )
-    near_w = _jaccard_drops(cands_w, batch_sh, other_sh_w, threshold)
-
-    # (4) near-dup, vs index: probe the bucket table with the broadcast
-    # batch band rows, verify against the stored shingles of just the
-    # candidate index docs
-    hist_buckets = spark.read.schema(_BUCKETS_SCHEMA).parquet(
-        os.path.join(root, "buckets")
-    )
-    if exclude_batch is not None:
-        hist_buckets = hist_buckets.filter(F.col("src_batch") != exclude_batch)
-    if len(batch_buckets) <= pushdown_limit:
+    hist_buckets = scan("buckets", _BUCKETS_SCHEMA)
+    if buckets is not None:
         # scan-level prune on the 64-bit bucket value alone (composite
         # (band,bucket) isn't IN-pushable); the join below still
         # matches on the full composite key
-        hist_buckets = hist_buckets.filter(in_values_cond("bucket", batch_buckets))
+        hist_buckets = hist_buckets.filter(in_values_cond("bucket", buckets))
     # referenced twice (semi-join + verify) but left LAZY: with the
     # IN-pruned scan the recompute is cheap, and the final plan keeps
     # the bucket scan visible (pushdown plan-gated in pytest)
@@ -575,58 +650,119 @@ def _dedup_batch_parts(
         .select("doc", "other")
         .distinct()
     )
-    hist_sh_scan = spark.read.schema(_SHINGLES_SCHEMA).parquet(
-        os.path.join(root, "shingles")
-    )
-    if exclude_batch is not None:
-        hist_sh_scan = hist_sh_scan.filter(F.col("src_batch") != exclude_batch)
     hist_sh = (
-        hist_sh_scan
+        scan("shingles", _SHINGLES_SCHEMA)
         .join(F.broadcast(cands_x.select(F.col("other").alias("doc")).distinct()),
               "doc", "left_semi")
-        .select(F.col("doc").alias("other"), F.col("shingles").alias("other_shingles"))
+        .select("doc", "shingles")
     )
-    near_x = _jaccard_drops(cands_x, batch_sh, hist_sh, threshold)
+    near_x = _jaccard_drops(cands_x, feats.select("doc", "shingles"), hist_sh, threshold)
+    return exact_x, near_x
 
-    # ``pin_drops``: the append path anti-joins the drop set against
-    # batch_df, feats AND bands_b, and an un-pinned union would re-run
-    # all four probe legs per consumer — materialize it once (tiny:
-    # dropped ids only), with the drop count riding the same job (r19;
-    # the count-after-pin was one more scheduler round per batch). The
-    # single-consumer probe (public dedup_batch_against_index) keeps it
-    # lazy so the returned plan still EXPOSES the broadcast-probe shape
-    # (plan-gated in pytest).
-    drops = exact_w.union(exact_x).union(near_w).union(near_x).distinct()
-    n_drops = -1
-    drop_ids: list | None = None
-    if pin_drops and 0 <= n_in <= pushdown_limit:
-        # Small batch (n_in bounds the drop set): run the probe DAG as
-        # ONE collect and hand every consumer the drop set as literal
-        # values — each of the five downstream writes then anti-joins
-        # via a plain NOT-IN filter instead of embedding a broadcast
-        # exchange, which Spark executes as its own async job (r19; the
-        # per-batch broadcast jobs were the dominant scheduler cost).
-        # A NULL id never matches the anti-join, so the filter keeps it
-        # too.
-        drop_ids = [r["doc"] for r in drops.collect()]
-        n_drops = len(drop_ids)
-        survivors = batch_df.filter(_keep_cond(id_col, drop_ids))
-    else:
-        if pin_drops:
-            from ais_data_pipeline_spark.checkpointing import (
-                materialize_counted,
-            )
 
-            drops, n_drops = materialize_counted(drops)
-        survivors = batch_df.join(
-            F.broadcast(drops.withColumnRenamed("doc", id_col)),
-            id_col,
-            "left_anti",
+def _small_batch_drop_ids(
+    feats: DataFrame,
+    bands_b: DataFrame,
+    scan: Callable[[str, str], DataFrame],
+    threshold: float,
+    pushdown_limit: int,
+) -> list:
+    """The drop set of a batch of at most ``pushdown_limit`` docs as
+    driver-side ids, in three collects; every set that crosses between
+    the batch and the index goes to the driver once and comes back as
+    literals or a local relation. NULL ids are left out: a NULL key
+    never matches the anti-join these ids stand in for."""
+    from ais_data_pipeline_spark.localrel import local_df
+
+    # round 1: one narrow job over the pinned frame — each row's id,
+    # hash and exact-within-batch flag, plus the band rows' buckets; no
+    # distinct, no shuffle. The regime bounds it (n_in <= pushdown_limit
+    # rows, at most ``bands`` band rows each); the bucket SET is what
+    # can pass the cap, and then round 2 is skipped.
+    r1 = (
+        feats.select(F.lit(0).alias("__t"), "doc", "text_hash", "__xw")
+        .unionByName(
+            bands_b.select(F.lit(1).alias("__t"), "bucket"),
+            allowMissingColumns=True,
         )
-    return (
-        survivors, feats, bands_b, drops,
-        (max_bucket_size is not None), n_in, n_drops, drop_ids,
+        .toArrow()
+        .to_pylist()
     )
+    rows = [r for r in r1 if r["__t"] == 0]
+    if not rows:
+        return []
+    drops = {r["doc"] for r in rows if r["__xw"]}
+    hashes = sorted({r["text_hash"] for r in rows if r["text_hash"] is not None})
+    buckets = sorted({r["bucket"] for r in r1 if r["__t"] == 1 and r["bucket"] is not None})
+
+    # round 2: the index hits of both literal probe sets in one job —
+    # hash and bucket scans IN-pushed (bloom row-group skipping) and
+    # unioned, capped at pushdown_limit + 1 rows so a hot index bucket
+    # never pulls an unbounded list to the driver
+    hits = None
+    if len(buckets) <= pushdown_limit:
+        hits = (
+            scan("hashes", _HASHES_SCHEMA)
+            .filter(in_values_cond("text_hash", hashes))
+            .select(F.lit(0).alias("__t"), "text_hash")
+            .unionByName(
+                scan("buckets", _BUCKETS_SCHEMA)
+                .filter(in_values_cond("bucket", buckets))
+                .select(
+                    F.lit(1).alias("__t"), F.col("doc").alias("other"),
+                    "band", "bucket",
+                ),
+                allowMissingColumns=True,
+            )
+            .limit(pushdown_limit + 1)
+            .toArrow()
+            .to_pylist()
+        )
+        if len(hits) > pushdown_limit:
+            hits = None
+
+    # round 3: one collect verifies Jaccard for the within-batch pairs
+    # and the index candidates. Pairs stay in Spark: the batch band rows
+    # are ONE broadcast shared by both pairings, the batch shingles one
+    # more, and no distinct adds a shuffle stage — a doc repeats once
+    # per passing pair and band, so the collect is capped like rounds
+    # 1-2 and only a degenerate batch past the cap dedupes in Spark.
+    batch_sh = feats.select("doc", "shingles")
+    bb = F.broadcast(bands_b)
+    verified = _jaccard_drops(_within_pairs(bands_b, bb), batch_sh, batch_sh, threshold)
+    if hits is None:
+        # a probe set over the cap: the index legs keep the lazy
+        # broadcast-join form, IN-pushed where the set fits
+        exact_x, near_x = _index_drop_legs(
+            feats, bands_b, scan, threshold, hashes,
+            buckets if len(buckets) <= pushdown_limit else None,
+        )
+        verified = verified.union(exact_x).union(near_x)
+    else:
+        hit_hashes = {r["text_hash"] for r in hits if r["__t"] == 0}
+        drops.update(r["doc"] for r in rows if r["text_hash"] in hit_hashes)
+        cands = [(r["other"], r["band"], r["bucket"]) for r in hits if r["__t"] == 1]
+        if cands:
+            pairs_x = (
+                local_df(
+                    feats.sparkSession, cands, "other bigint, band int, bucket bigint"
+                )
+                .join(bb, ["band", "bucket"])
+                .select("doc", "other")
+            )
+            hist_sh = scan("shingles", _SHINGLES_SCHEMA).filter(
+                in_values_cond("doc", list({c[0] for c in cands}))
+            )
+            verified = verified.union(
+                _jaccard_drops(
+                    pairs_x, batch_sh, hist_sh.select("doc", "shingles"), threshold
+                )
+            )
+    got = verified.limit(pushdown_limit + 1).toArrow()
+    if got.num_rows > pushdown_limit:
+        got = verified.distinct().toArrow()
+    drops.update(got.column("doc").to_pylist())
+    return [d for d in drops if d is not None]
 
 
 def _keep_cond(col_name: str, drop_ids: list) -> "F.Column":
@@ -634,8 +770,6 @@ def _keep_cond(col_name: str, drop_ids: list) -> "F.Column":
     the same ids: non-matching rows pass, NULL ids pass (a NULL key
     never matches an anti-join probe). The IN list parses as ONE SQL
     expression — not one py4j literal call per element."""
-    from ais_data_pipeline_spark.operators.util import in_values_cond
-
     if not drop_ids:
         return F.lit(True)
     c = F.col(col_name)

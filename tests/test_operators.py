@@ -8205,3 +8205,32 @@ def test_robots_txt_rules(spark):
         7: (False, None), 8: (True, None), 9: (False, None),
         10: (True, None), 11: (True, None),
     }
+
+
+@pytest.mark.parametrize("escaped_literals", ["false", "true"])
+def test_in_values_cond_literal_round_trip(spark, escaped_literals):
+    """``in_values_cond`` values match exactly under either setting of
+    ``spark.sql.parser.escapedStringLiterals``: quotes and backslashes
+    in strings, NaN and ±inf in doubles; a NULL in the list matches
+    nothing."""
+    from ais_data_pipeline_spark.localrel import local_df
+    from ais_data_pipeline_spark.operators.util import in_values_cond
+
+    strs = ["it's", "back\\slash", "\\'", "plain", "a''b", 'dq"x']
+    dbls = [float("nan"), float("inf"), float("-inf"), 1.5, -0.25]
+    df = local_df(
+        spark,
+        [(s, None) for s in strs + ["other", "it"]]
+        + [(None, d) for d in dbls + [2.0, 0.0]],
+        "s string, d double",
+    )
+    conf = "spark.sql.parser.escapedStringLiterals"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, escaped_literals)
+    try:
+        got_s = {r["s"] for r in df.filter(in_values_cond("s", strs + [None])).collect()}
+        got_d = [r["d"] for r in df.filter(in_values_cond("d", dbls)).collect()]
+    finally:
+        spark.conf.set(conf, prev)
+    assert got_s == set(strs)
+    assert sorted(map(repr, got_d)) == sorted(map(repr, dbls))

@@ -243,12 +243,173 @@ def test_incremental_dedup_replay_idempotent(spark, sf_dir, tmp_path):
     assert kept == [11, 22]
 
 
-def test_incremental_dedup_large_batch_regime_equivalent(spark, sf_dir, tmp_path):
-    """r19: batches at or under ``pushdown_limit`` collect their drop
-    set once and filter consumers by literal NOT-IN values; larger
-    batches keep the r18 pinned-drop-set + broadcast-anti shape. Force
-    the LARGE regime (pushdown_limit=0) on the same data — kept rows,
-    accounting, and every index table must be bit-identical."""
+_REGIME_SCHEMA = "doc_id bigint, text string"
+_VOCAB = [f"w{i}" for i in range(400)]
+
+
+def _words(rng, n: int) -> str:
+    return " ".join(rng.choice(_VOCAB) for _ in range(n))
+
+
+def _regime_case(spark, sf_dir: str, case: str):
+    """(history, [(batch_id, batch), ...]) for one regime-equivalence
+    case. Generated cases use ``_REGIME_SCHEMA`` rows built from a
+    seeded vocabulary; each comment names the path the case drives in
+    the small regime (pushdown_limit=10_000)."""
+    import random
+
+    from ais_data_pipeline_spark.localrel import local_df
+    from ais_data_pipeline_spark.sources.parquet import read_table
+
+    if case == "fixture":
+        docs = read_table(spark, sf_dir, "documents")
+        k = F.col("doc_id") % 3
+        return docs.filter(k == 0), [(0, docs.filter(k == 1))]
+    rng = random.Random(7)
+    mk = lambda rows: local_df(spark, rows, _REGIME_SCHEMA)  # noqa: E731
+    quoted = "it's a \"quoted\" line with a back\\slash and \\' escapes " + _words(rng, 8)
+    hist_rows = [(i, _words(rng, 14)) for i in range(40)]
+    hist_rows += [(40, quoted), (41, "hello world")]
+    if case == "adversarial":
+        boiler = _words(rng, 12)
+        base = hist_rows[3][1].split()
+        rows = [
+            (None, hist_rows[0][1]),  # NULL id, exact copy of history
+            (None, _words(rng, 12)),  # NULL id, fresh
+            (5, hist_rows[1][1]),  # duplicate ids: one exact copy of
+            (5, _words(rng, 12)),  # history, one fresh text
+            (6, hist_rows[1][1]),  # same text as the id-5 copy
+            (7, None),  # NULL text
+            (8, ""),  # empty text
+            (9, quoted),  # quotes + backslashes, copy of history
+            (10, quoted + " tail"),  # near copy of it
+            (11, " ".join(base[:-1] + ["zz"])),  # near copy of history
+            (12, "hello world"),  # no shingles: only the hash can match
+        ]
+        # a near-duplicate burst: its within-batch verified pairs
+        # overflow the round-3 cap and dedupe in Spark
+        rows += [(100 + i, f"{boiler} t{i}") for i in range(60)]
+        return mk(hist_rows), [(0, mk(rows))]
+    if case == "empty":
+        return mk(hist_rows), [(0, mk([]))]
+    if case == "replay":
+        batch = mk([(50 + i, hist_rows[i][1] if i % 4 == 0 else _words(rng, 12))
+                    for i in range(20)])
+        return mk(hist_rows), [(0, batch), (0, batch)]
+    if case == "hits_overflow":
+        # 700 history copies of one text: a batch copy hits 700 hash
+        # rows + 700 x 16 bucket rows, past the round-2 cap
+        hot = _words(rng, 14)
+        hist = mk(hist_rows + [(1000 + i, hot) for i in range(700)])
+        near = " ".join(hot.split()[:-1] + ["zz"])
+        return hist, [(0, mk([(1, hot), (2, near), (3, _words(rng, 12))]))]
+    assert case == "wide_batch"
+    # 700 fresh docs: over 10_000 distinct buckets, so round 2 is
+    # skipped and the bucket leg keeps the broadcast-join form
+    rows = [(i, _words(rng, 12)) for i in range(700)]
+    rows += [(800 + i, hist_rows[i][1]) for i in range(5)]
+    return mk(hist_rows), [(0, mk(rows))]
+
+
+def _dedup_state(spark, index: str, out: str, out_schema) -> dict:
+    """Sorted rows of the survivors table and all four index tables."""
+    from ais_data_pipeline_spark.streaming.incremental_dedup import (
+        _BUCKETS_SCHEMA,
+        _HASHES_SCHEMA,
+        _SHINGLES_SCHEMA,
+        _STATS_SCHEMA,
+    )
+
+    tables = {
+        "out": (out, out_schema),
+        "hashes": (index + "/hashes", _HASHES_SCHEMA),
+        "buckets": (index + "/buckets", _BUCKETS_SCHEMA),
+        "shingles": (index + "/shingles", _SHINGLES_SCHEMA),
+        "bucket_stats": (index + "/bucket_stats", _STATS_SCHEMA),
+    }
+    return {
+        name: sorted(repr(tuple(r)) for r in spark.read.schema(schema).parquet(path).collect())
+        for name, (path, schema) in tables.items()
+    }
+
+
+@pytest.mark.parametrize(
+    "case",
+    ["fixture", "adversarial", "empty", "replay", "hits_overflow", "wide_batch"],
+)
+def test_incremental_dedup_large_batch_regime_equivalent(spark, sf_dir, tmp_path, case):
+    """Batches at or under ``pushdown_limit`` take the three-collect
+    small regime (literal probes, driver-side drop set, NOT-IN
+    consumers); larger batches keep the pinned-drop-set +
+    broadcast-anti shape. Force the LARGE regime (pushdown_limit=0) on
+    the same adversarial inputs — NULL ids, duplicate ids, NULL and
+    empty text, quotes and backslashes, an empty batch, a replayed
+    batch id, a collect cap overflowed — and require identical
+    survivors, returned counts and rows of every index table. (The
+    empty batch takes the small path at both limits: n_in = 0.)"""
+    from ais_data_pipeline_spark.streaming.incremental_dedup import (
+        build_dedup_index,
+        dedup_and_append_batch,
+    )
+
+    hist, batches = _regime_case(spark, sf_dir, case)
+    out_schema = T.StructType(
+        batches[0][1].schema.fields + [T.StructField("src_batch", T.LongType())]
+    )
+    results = {}
+    for tag, lim in (("small", 10_000), ("large", 0)):
+        base = str(tmp_path / tag)
+        index, out = base + "/idx", base + "/out"
+        build_dedup_index(hist, index)
+        counts = [
+            dedup_and_append_batch(
+                batch, batch_id, index, out, threshold=0.5, pushdown_limit=lim
+            )
+            for batch_id, batch in batches
+        ]
+        results[tag] = (counts, _dedup_state(spark, index, out, out_schema))
+    assert results["small"] == results["large"]
+    assert results["small"][1]["out"] or case == "empty"
+
+
+def test_incremental_dedup_null_id_keeps_rows(spark, tmp_path):
+    """A NULL id in the drop set must not turn the NOT-IN survivor
+    filter NULL for every row: a 3-row batch whose NULL-id row exactly
+    copies a history doc keeps all 3 rows in both regimes (a NULL key
+    is never anti-joined)."""
+    from ais_data_pipeline_spark.localrel import local_df
+    from ais_data_pipeline_spark.streaming.incremental_dedup import (
+        build_dedup_index,
+        dedup_and_append_batch,
+    )
+
+    hist_text = "alpha beta gamma delta epsilon zeta"
+    hist = local_df(spark, [(0, hist_text)], _REGIME_SCHEMA)
+    batch = local_df(
+        spark,
+        [
+            (None, hist_text),
+            (1, "one two three four five six seven"),
+            (2, "nine ten eleven twelve thirteen fourteen"),
+        ],
+        _REGIME_SCHEMA,
+    )
+    for lim in (0, 10_000):
+        base = str(tmp_path / str(lim))
+        build_dedup_index(hist, base + "/idx")
+        n_in, n_kept = dedup_and_append_batch(
+            batch, 0, base + "/idx", base + "/out", pushdown_limit=lim
+        )
+        assert (n_in, n_kept) == (3, 3), lim
+        kept = spark.read.parquet(base + "/out").collect()
+        assert sorted(r["doc_id"] for r in kept if r["doc_id"] is not None) == [1, 2]
+
+
+def test_incremental_dedup_small_batch_job_floor(spark, sf_dir, tmp_path):
+    """A fixture-sized micro-batch in the small regime runs at most 16
+    Spark jobs end to end — the pin, three collects and the overlapped
+    writes. Counted from the status tracker, which also sees the
+    writer-pool threads' jobs, so the floor cannot creep back up."""
     from ais_data_pipeline_spark.sources.parquet import read_table
     from ais_data_pipeline_spark.streaming.incremental_dedup import (
         build_dedup_index,
@@ -256,27 +417,15 @@ def test_incremental_dedup_large_batch_regime_equivalent(spark, sf_dir, tmp_path
     )
 
     docs = read_table(spark, sf_dir, "documents")
-    hist = docs.filter(F.col("doc_id") % 3 == 0)
-    batch = docs.filter(F.col("doc_id") % 3 == 1)
-
-    results = {}
-    for tag, lim in (("small", 10_000), ("large", 0)):
-        base = str(tmp_path / tag)
-        index, out = base + "/idx", base + "/out"
-        build_dedup_index(hist, index)
-        counts = dedup_and_append_batch(
-            batch, 0, index, out, threshold=0.5, pushdown_limit=lim
-        )
-        kept = sorted(r["doc_id"] for r in spark.read.parquet(out).collect())
-        hashes = sorted(
-            r["doc"] for r in spark.read.parquet(index + "/hashes").collect()
-        )
-        buckets = sorted(
-            (r["doc"], r["band"], r["bucket"])
-            for r in spark.read.parquet(index + "/buckets").collect()
-        )
-        results[tag] = (counts, kept, hashes, buckets)
-    assert results["small"] == results["large"]
+    k = F.col("doc_id") % 3
+    index, out = str(tmp_path / "idx"), str(tmp_path / "out")
+    build_dedup_index(docs.filter(k == 0), index)
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    n_in, _ = dedup_and_append_batch(docs.filter(k == 1), 0, index, out)
+    jobs = set(tracker.getJobIdsForGroup(None)) - before
+    assert n_in <= 10_000  # the small regime
+    assert len(jobs) <= 16, sorted(jobs)
 
 
 def test_incremental_dedup_partial_failure_replay(spark, sf_dir, tmp_path):
