@@ -7,11 +7,13 @@ ratios → categorical casts (T2/T3) → min/max-driven downcast with
 quarantine (variant notebook 0_preprocessing.ipynb:3385-3473) →
 collect → parquet/brotli.
 
-Spark shape: one lazy DataFrame plan mutated by the profiling pass
-(driver-side decisions, executor-side batched aggs), then a single
-partitioned zstd parquet write plus the quarantine side-write. Bounded
-memory at any scale — nothing ever collects to the driver except the
-profile aggregates.
+Spark shape: one job parses the CSV, tags each row good (int32
+admission) or bad, pins the tagged rows and — on an ``Observation``
+riding that same job — counts them and profiles the good ones; the
+driver decides the casts from the observed row, then the main and
+quarantine writes run concurrently off the pin. Three jobs in all, one
+CSV scan. Bounded memory at any scale — nothing ever collects to the
+driver except the observed profile row.
 
 Invariants reproduced (SURVEY §5): 27-column output (no ``_ar``, no
 ``actual_area``), unparseable dates → null, rows_out + rows_quarantined
@@ -20,18 +22,21 @@ Invariants reproduced (SURVEY §5): 27-column output (no ``_ar``, no
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ais_data_pipeline_spark.checkpointing import materialize
 from ais_data_pipeline_spark.observability import Stopwatch, log
 from ais_data_pipeline_spark.operators.profiling import (
     apply_tightening,
     estimate_size,
     int32_admission_predicate,
     plan_tightening,
+    profile_aggs,
 )
 from ais_data_pipeline_spark.operators.projections import exclude_substring
 from ais_data_pipeline_spark.operators.transforms import parse_date_lenient
@@ -77,18 +82,28 @@ def run_pipeline(
     long_cols = [f.name for f in df.schema.fields if isinstance(f.dataType, T.LongType)]
     result = PipelineResult()
 
-    if long_cols:
-        good_pred = int32_admission_predicate(long_cols)
-        tagged = df.withColumn(
-            "__good", F.coalesce(good_pred.cast("boolean"), F.lit(False))
-        ).persist()
-        good = tagged.filter(F.col("__good")).drop("__good")
-        bad = tagged.filter(~F.col("__good")).drop("__good")
-    else:
-        tagged, good, bad = None, df, None
+    good_pred = (
+        F.coalesce(int32_admission_predicate(long_cols).cast("boolean"), F.lit(False))
+        if long_cols
+        else F.lit(True)
+    )
+    # One job parses, counts, profiles the good rows and pins the tagged
+    # rows: the profile rides the pin as observed metrics, so it costs
+    # no job and no second read of the rows.
+    obs = Observation("profile")
+    tagged = materialize(
+        df.withColumn("__good", good_pred).observe(
+            obs,
+            F.count(F.lit(1)).alias("__rows"),
+            *profile_aggs(df.schema, F.col("__good")),
+        )
+    )
+    stats = obs.get
+    result.rows_in = stats["__rows"]
+    good = tagged.filter(F.col("__good")).drop("__good")
+    bad = tagged.filter(~F.col("__good")).drop("__good") if long_cols else None
 
-    # profiling pass → categorical/downcast decisions (2 batched aggs)
-    plan = plan_tightening(good)
+    plan = plan_tightening(df.schema, stats)
     log(
         "tightening_plan",
         categorical_strings=plan.categorical_strings,
@@ -99,19 +114,15 @@ def run_pipeline(
     tightened = apply_tightening(good, plan)
     result.columns_out = tightened.columns
     if estimate:
-        result.est_size = estimate_size(tightened)
+        result.est_size = estimate_size(tightened, n_rows=stats["__n"])
 
-    # Row accounting rides on the write itself (df.observe) — re-reading
-    # the just-written output for a .count() would add a full extra scan
-    # of the table per sink at 100 TB.
-    from pyspark.sql import Observation
-
-    # The main and quarantine writes are independent jobs over the
-    # same persisted parse — overlap them from a thread pool (guide
-    # §2.6) so the (tiny) quarantine write rides the main write's tail
-    # instead of serializing after it.
-    from concurrent.futures import ThreadPoolExecutor
-
+    # Row accounting rides on the writes themselves (df.observe) —
+    # re-reading the just-written output for a .count() would add a
+    # full extra scan of the table per sink at 100 TB. The main and
+    # quarantine writes are independent jobs over the same pin —
+    # overlap them from a thread pool (guide §2.6) so the (tiny)
+    # quarantine write rides the main write's tail instead of
+    # serializing after it.
     obs_out = Observation("rows_out")
 
     def write_main() -> None:
@@ -141,9 +152,6 @@ def run_pipeline(
     result.rows_out = obs_out.get["n"]
     if bad is not None:
         result.rows_quarantined = obs_bad.get["n"]
-    if tagged is not None:
-        tagged.unpersist()
-    result.rows_in = result.rows_out + result.rows_quarantined
 
     result.elapsed_sec = sw.elapsed()
     log(

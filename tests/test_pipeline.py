@@ -17,53 +17,65 @@ from ais_data_pipeline_spark.plans.rent_contracts import run_pipeline
 N_ROWS = 500
 
 
+COLUMNS = [
+    "contract_id",
+    "contract_reg_type_id",
+    "contract_reg_type_ar",
+    "contract_reg_type_en",
+    "contract_start_date",
+    "contract_end_date",
+    "contract_amount",
+    "annual_amount",
+    "area_id",
+    "area_name_ar",
+    "area_name_en",
+    "actual_area",
+    "project_number",
+]
+
+
+def _fixture_row(i: int, amount=None, project_number=None) -> list:
+    """Row ``i`` of the F1-shaped fixture; ``amount`` and
+    ``project_number`` override the generated values."""
+    reg = 1 + (i % 2)
+    start = f"2020-{1 + i % 12:02d}-{1 + i % 28:02d}"
+    end = "garbage-date" if i % 97 == 0 else f"2021-{1 + i % 12:02d}-{1 + i % 28:02d}"
+    if amount is None:
+        amount = 5_000_000_000 if i % 100 == 7 else 40_000 + i  # 5 rows overflow int32
+    if project_number is None:
+        project_number = "" if i % 10 == 0 else ("None" if i % 11 == 0 else i % 30)
+    area = i % 20
+    return [
+        f"CRT{i:08d}",
+        reg,
+        f"عقد{reg}",
+        "New" if reg == 1 else "Renew",
+        start,
+        end,
+        amount,
+        amount,
+        area,
+        f"منطقة{area}",
+        f"Area {area}",
+        100 + i % 50,
+        project_number,
+    ]
+
+
+def _write_csv(path, rows) -> str:
+    with open(path, "w", newline="") as f:
+        w = csv.writer(f)
+        w.writerow(COLUMNS)
+        w.writerows(rows)
+    return str(path)
+
+
 @pytest.fixture(scope="module")
 def fixture_csv(tmp_path_factory):
     """Deterministic F1-shaped CSV: _ar mirrors, actual_area, null
     tokens, bad dates, a few int32-overflowing contract amounts."""
     path = tmp_path_factory.mktemp("rc") / "rent_contracts.csv"
-    cols = [
-        "contract_id",
-        "contract_reg_type_id",
-        "contract_reg_type_ar",
-        "contract_reg_type_en",
-        "contract_start_date",
-        "contract_end_date",
-        "contract_amount",
-        "annual_amount",
-        "area_id",
-        "area_name_ar",
-        "area_name_en",
-        "actual_area",
-        "project_number",
-    ]
-    with open(path, "w", newline="") as f:
-        w = csv.writer(f)
-        w.writerow(cols)
-        for i in range(N_ROWS):
-            reg = 1 + (i % 2)
-            start = f"2020-{1 + i % 12:02d}-{1 + i % 28:02d}"
-            end = "garbage-date" if i % 97 == 0 else f"2021-{1 + i % 12:02d}-{1 + i % 28:02d}"
-            amount = 5_000_000_000 if i % 100 == 7 else 40_000 + i  # 5 rows overflow int32
-            area = i % 20
-            w.writerow(
-                [
-                    f"CRT{i:08d}",
-                    reg,
-                    f"عقد{reg}",
-                    "New" if reg == 1 else "Renew",
-                    start,
-                    end,
-                    amount,
-                    amount,
-                    area,
-                    f"منطقة{area}",
-                    f"Area {area}",
-                    100 + i % 50,
-                    "" if i % 10 == 0 else ("None" if i % 11 == 0 else i % 30),
-                ]
-            )
-    return str(path)
+    return _write_csv(path, [_fixture_row(i) for i in range(N_ROWS)])
 
 
 SCHEMA = T.StructType(
@@ -95,9 +107,10 @@ def test_pipeline_invariants(spark, fixture_csv, tmp_path):
     assert "actual_area" not in res.columns_out
     assert "area_name_en" in res.columns_out
 
-    # row conservation + quarantine picked up exactly the overflow rows
+    # row conservation against the counted input + quarantine picked
+    # up exactly the overflow rows
     assert res.rows_in == N_ROWS
-    assert res.rows_out + res.rows_quarantined == N_ROWS
+    assert res.rows_out + res.rows_quarantined == res.rows_in
     assert res.rows_quarantined == 5
 
     main = spark.read.parquet(out)
@@ -113,14 +126,132 @@ def test_pipeline_invariants(spark, fixture_csv, tmp_path):
 
 def test_pipeline_downcast_decisions(spark, fixture_csv, tmp_path):
     res = run_pipeline(
-        spark, fixture_csv, str(tmp_path / "m2"), str(tmp_path / "q2"), schema=SCHEMA
+        spark,
+        fixture_csv,
+        str(tmp_path / "m2"),
+        str(tmp_path / "q2"),
+        schema=SCHEMA,
+        estimate=True,
     )
+    # the size estimate extrapolates to the observed good-row count
+    assert res.est_size["n_rows"] == res.rows_out
     main = spark.read.parquet(str(tmp_path / "m2"))
     dt = dict(main.dtypes)
     # contract_reg_type_id ∈ {1,2} → tightened below long
     assert dt["contract_reg_type_id"] in ("tinyint", "smallint", "string", "boolean")
     # amounts fit int32 after quarantine → narrowed
     assert dt["contract_amount"] in ("int", "string")
+
+
+#: CSVs for the profile-pin equivalence test: name -> rows, beside the
+#: shared fixture. Every case keeps at least one long column except
+#: ``no_long_columns``, which reads the fixture all-string.
+PROFILE_PIN_CASES = {
+    "fixture": None,
+    "header_only": [],
+    "all_quarantined": [_fixture_row(i, amount=5_000_000_000) for i in range(40)],
+    "no_long_columns": None,
+    "all_null_long": [_fixture_row(i, project_number="") for i in range(40)],
+    "int32_bounds": [
+        _fixture_row(i, amount=a)
+        for i, a in enumerate(
+            [2**31 - 1, -(2**31 - 1), -(2**31), 2**31, -(2**31) - 1, 0, 7]
+        )
+    ],
+}
+
+
+def _plain_profile(spark, csv_path, schema):
+    """The pre-pin shape: parse, filter the good rows, then profile
+    them with one plain aggregation (its own job). Returns
+    (good frame, profile row as a dict)."""
+    from ais_data_pipeline_spark.operators.profiling import (
+        _profiled_columns,
+        int32_admission_predicate,
+    )
+    from ais_data_pipeline_spark.operators.projections import exclude_substring
+    from ais_data_pipeline_spark.operators.transforms import parse_date_lenient
+    from ais_data_pipeline_spark.plans.rent_contracts import DATE_COLUMNS
+    from ais_data_pipeline_spark.sources.csv import read_csv
+
+    df = parse_date_lenient(
+        exclude_substring(read_csv(spark, csv_path, schema=schema), "_ar"), DATE_COLUMNS
+    )
+    long_cols = [f.name for f in df.schema.fields if isinstance(f.dataType, T.LongType)]
+    good = (
+        df.filter(F.coalesce(int32_admission_predicate(long_cols), F.lit(False)))
+        if long_cols
+        else df
+    )
+    string_cols, int_cols = _profiled_columns(good.schema)
+    aggs = [F.approx_count_distinct(c).alias(f"{c}__nd") for c in string_cols + int_cols]
+    aggs.append(F.count(F.lit(1)).alias("__n"))
+    for c in int_cols:
+        aggs += [F.min(c).alias(f"{c}__min"), F.max(c).alias(f"{c}__max")]
+    return good, good.agg(*aggs).first().asDict()
+
+
+@pytest.mark.parametrize("checkpoints", ["local", "reliable"])
+@pytest.mark.parametrize("case", list(PROFILE_PIN_CASES))
+def test_pipeline_profile_pin_equivalent(
+    spark, fixture_csv, tmp_path, monkeypatch, case, checkpoints
+):
+    """The profile observed on the pin (aggregates guarded by
+    ``CASE WHEN __good``) equals a plain aggregation over the filtered
+    good rows, so the TighteningPlan and the written dtypes are the
+    same as the old persist-then-agg shape — on edge inputs and under
+    both checkpoint flavors. ``rows_in`` is a real count of the input
+    and the writes conserve it."""
+    from ais_data_pipeline_spark import checkpointing as ckpt
+    from ais_data_pipeline_spark.operators.profiling import apply_tightening, plan_tightening
+    from ais_data_pipeline_spark.plans import rent_contracts
+
+    rows = PROFILE_PIN_CASES[case]
+    csv_path = fixture_csv if rows is None else _write_csv(tmp_path / "in.csv", rows)
+    schema = (
+        T.StructType([T.StructField(f.name, T.StringType()) for f in SCHEMA.fields])
+        if case == "no_long_columns"
+        else SCHEMA
+    )
+    seen = {}
+
+    def capture(schema_, stats, *args, **kwargs):
+        seen["stats"] = dict(stats)
+        seen["plan"] = plan_tightening(schema_, stats, *args, **kwargs)
+        return seen["plan"]
+
+    monkeypatch.setattr(rent_contracts, "plan_tightening", capture)
+    out, quar = str(tmp_path / "main"), str(tmp_path / "quarantine")
+    try:
+        if checkpoints == "reliable":
+            ckpt.set_reliable_checkpoints(spark, str(tmp_path / "ckpt"))
+        res = rent_contracts.run_pipeline(spark, csv_path, out, quar, schema=schema)
+    finally:
+        ckpt.set_local_checkpoints()
+
+    n_in = len(rows) if rows is not None else N_ROWS
+    good, want_stats = _plain_profile(spark, csv_path, schema)
+    want_plan = plan_tightening(good.schema, want_stats)
+    assert seen["stats"] == {**want_stats, "__rows": n_in}
+    assert seen["plan"] == want_plan
+    assert spark.read.parquet(out).dtypes == apply_tightening(good, want_plan).dtypes
+
+    assert res.rows_in == n_in
+    assert res.rows_out == want_stats["__n"]
+    assert res.rows_out + res.rows_quarantined == res.rows_in
+
+
+def test_pipeline_job_floor(spark, fixture_csv, tmp_path):
+    """``run_pipeline`` runs at most 3 Spark jobs: the parse-profile-pin
+    and the two overlapped writes. Counted from the status tracker,
+    which also sees the writer-pool threads' jobs."""
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    run_pipeline(
+        spark, fixture_csv, str(tmp_path / "m"), str(tmp_path / "q"), schema=SCHEMA
+    )
+    jobs = set(tracker.getJobIdsForGroup(None)) - before
+    assert len(jobs) <= 3, sorted(jobs)
 
 
 def test_snapshot_time_travel(spark, tmp_path):
